@@ -14,7 +14,7 @@ format-agnostic):
     metrics/run_id=<run>/rule=<rule>/*.parquet   (rule-level stats /
                           drift sketches: metric, column, value)
     manifest/*.parquet   (append-only: run_id, rule, bucket, status,
-                          rows_scanned, violation_count, wall_sec)
+                          rows_scanned, violation_count, wall_sec, seq)
 
 Semantics:
 
@@ -27,6 +27,13 @@ Semantics:
   ones recomputed on a bucket-filtered input.
 * Global rules (drift, stats sketches, uniqueness on other keys) are a
   single unit (bucket -1): rerun whole if not complete.
+* Group execution: a run sorts the rules it will execute into groups —
+  aligned rules with the same todo-bucket set, and all global rules —
+  and runs each group as one unit: one violations write, one verdicts
+  write, one metrics write (each partitioned by rule), verdicts built
+  on the driver, then ONE manifest batch. A crash before a group's
+  batch is published reruns the whole group; ``wall_sec`` is the
+  group's wall time, shared by its rows.
 * Idempotence: results are written with dynamic partition overwrite
   keyed by (run_id, rule, bucket) — re-running a completed partition
   replaces rather than double-counts. The manifest is append-only;
@@ -36,6 +43,7 @@ Semantics:
 from __future__ import annotations
 
 import dataclasses
+import functools
 import time
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -55,6 +63,7 @@ MANIFEST_SCHEMA = (
 # XOR, two identical rows do NOT cancel), and overflow-free under ANSI
 # (10^12 rows x 2^63 < 10^38).
 FINGERPRINT_SCHEMA = "bucket long, side string, n_rows long, fp string"
+VERDICT_SCHEMA = "rule string, bucket long, rows_scanned long, violation_count long"
 
 
 def bucket_fingerprints(
@@ -263,7 +272,16 @@ class ValidationRun:
         record_fingerprints: bool = False,
         fingerprint_bytes: bool = True,
     ) -> dict:
-        """Execute the rule set (resumable). With ``sample_buckets=k``
+        """Execute the rule set (resumable), one rule group at a time
+        (module docstring): a group's rules share one filtered input,
+        one write per table kind and one manifest batch, so resume is
+        exact at group grain — a crash before a group's batch reruns
+        the whole group, and every row of that batch carries the
+        group's wall time as ``wall_sec``. The summary counts
+        ``rules_run`` and ``rule_groups`` executed, ``rules_skipped``,
+        ``buckets_skipped``, ``rules_deferred``, ``buckets_inherited``.
+
+        With ``sample_buckets=k``
         this is a CANARY run: bucket-aligned rules run only on buckets
         ``[0, k)`` and global rules are deferred entirely — a 1/(N/k)
         cost pre-flight that catches systematic problems (schema break,
@@ -277,14 +295,13 @@ class ValidationRun:
         ``incremental_from=<base_run_id>`` makes this an INCREMENTAL
         re-validation — the scale path the reference lacks: it re-runs
         the full in-memory compare on every invocation
-        (`src/Forms/MainForm.cs` -> `src/Services/Validator.cs:20-30`), which
-        is fine at 10^4 rows and impossible at 10^12. Per-bucket input
-        fingerprints (see
-        :func:`bucket_fingerprints`) are compared against the base
-        run's recorded ones, and every bucket whose input is unchanged
-        on EVERY side inherits the base run's materialized violations
-        and verdicts (manifest status ``inherited`` — the lineage says
-        so) instead of recomputing. Only changed buckets pay the full
+        (`src/Forms/MainForm.cs` -> `src/Services/Validator.cs:20-30`),
+        fine at 10^4 rows and impossible at 10^12. Per-bucket input
+        fingerprints (:func:`bucket_fingerprints`) are compared against
+        the base run's recorded ones, and every bucket whose input is
+        unchanged on EVERY side inherits the base run's materialized
+        violations and verdicts (manifest status ``inherited`` — the
+        lineage says so) instead of recomputing. Only changed buckets pay the full
         rule pass; at 10^12 rows with a 0.1% daily churn that is a
         ~1000x cut in decode work. Correctness guards: inheritance is
         per bucket-aligned rule and only from buckets the base manifest
@@ -299,13 +316,9 @@ class ValidationRun:
         payload edits to surface in metadata; both runs must use the
         same mode (it is pinned in the fingerprint ``_meta`` row)."""
         ctx = RuleContext(
-            spark=self.spark,
-            images=images,
-            captions=captions,
-            num_buckets=self.num_buckets,
-            run_id=self.run_id,
-            key_col=self.key_col,
-            bucket_expr=self.bucket_expr,
+            spark=self.spark, images=images, captions=captions,
+            num_buckets=self.num_buckets, run_id=self.run_id,
+            key_col=self.key_col, bucket_expr=self.bucket_expr,
         )
         if sample_buckets is not None and not (
             0 < sample_buckets <= self.num_buckets
@@ -327,13 +340,10 @@ class ValidationRun:
             )
         done = self.completed()
         seq = int(time.time() * 1000)
-        summary = {
-            "rules_run": 0,
-            "rules_skipped": 0,
-            "buckets_skipped": 0,
-            "rules_deferred": 0,
-            "buckets_inherited": 0,
-        }
+        summary = dict.fromkeys(
+            ("rules_run", "rules_skipped", "buckets_skipped", "rules_deferred",
+             "buckets_inherited", "rule_groups"), 0,
+        )
         fp_rows = None
         if incremental_from is not None or record_fingerprints:
             # rule-set signature pins WHAT was validated, not just what
@@ -379,28 +389,24 @@ class ValidationRun:
         if incremental_from is not None:
             unchanged = self._unchanged_buckets(fp_rows, incremental_from)
             if unchanged:
-                pre = {r: set(b) for r, b in done.items()}
-                self._inherit(ctx, incremental_from, unchanged, done,
-                              seq, summary)
-                inherited_now = {
-                    r: done[r] - pre.get(r, set()) for r in done
-                }
+                inherited_now = self._inherit(
+                    ctx, incremental_from, unchanged, done, seq)
+                summary["buckets_inherited"] = sum(
+                    len(b) for b in inherited_now.values())
 
+        # Group planning: aligned rules with the same todo-bucket set
+        # share one filtered context, global rules share the whole
+        # input. Each group is one unit of work and of resume.
+        all_buckets = frozenset(range(self.num_buckets))
+        target = all_buckets if sample_buckets is None else frozenset(
+            range(sample_buckets))
+        groups: dict[tuple[bool, frozenset], list[Rule]] = {}
         for rule in self.rules:
-            aligned = rule_is_bucket_aligned(rule, ctx)
             done_buckets = done.get(rule.name, set())
-            if aligned:
-                all_buckets = set(range(self.num_buckets))
-                target = (
-                    set(range(sample_buckets))
-                    if sample_buckets is not None
-                    else all_buckets
-                )
+            if rule_is_bucket_aligned(rule, ctx):
                 todo = target - done_buckets
-                # r6 (ADVICE): buckets inherited THIS invocation are
-                # reported under buckets_inherited only — counting them
-                # into buckets_skipped as well double-reported every
-                # inherited bucket and inflated the resume-skip stat
+                # buckets inherited THIS invocation are reported under
+                # buckets_inherited only, not twice
                 summary["buckets_skipped"] += len(
                     (done_buckets & target)
                     - inherited_now.get(rule.name, set())
@@ -408,91 +414,32 @@ class ValidationRun:
                 if not todo:
                     summary["rules_skipped"] += 1
                     continue
-                rule_ctx = self._filtered_ctx(
-                    ctx, None if todo == all_buckets else todo
-                )
+                groups.setdefault((True, todo), []).append(rule)
+            elif sample_buckets is not None:
+                # global rules (drift, cross-bucket stats) see a biased
+                # sample under a bucket filter — defer them to the full
+                # run rather than record a misleading whole-table
+                # verdict from 1/(N/k) of the data
+                summary["rules_deferred"] += 1
+            elif done_buckets:
+                summary["rules_skipped"] += 1
             else:
-                if sample_buckets is not None:
-                    # global rules (drift, cross-bucket stats) see a
-                    # biased sample under a bucket filter — defer them
-                    # to the full run rather than record a misleading
-                    # whole-table verdict from 1/(N/k) of the data
-                    summary["rules_deferred"] += 1
-                    continue
-                if done_buckets:
-                    summary["rules_skipped"] += 1
-                    continue
-                rule_ctx = ctx
+                groups.setdefault((False, all_buckets), []).append(rule)
 
-            t0 = time.time()
-            vio = rule.violations(rule_ctx).persist()
-            self._write_partitioned(vio, rule.name)
-            verd = self._verdicts(rule_ctx, rule, vio, aligned)
-            self._write_partitioned(verd, rule.name, kind="verdicts")
-            # north_rule: the checkpoint layout carries stats metrics.
-            # Metrics describe the WHOLE table, so they are computed on
-            # the unfiltered ctx even for a bucket-filtered resume, and
-            # written with overwrite — recomputing them is idempotent.
-            # (A crash before the manifest append reruns the rule and
-            # simply overwrites identical metrics.) Canary runs are the
-            # exception: scanning the whole table for metrics would
-            # defeat the 1/(N/k) cost point, so they use the sampled
-            # ctx — the follow-up full run overwrites with whole-table
-            # metrics.
-            m = rule.metrics(ctx if sample_buckets is None else rule_ctx)
-            if m is not None:
-                m.select("metric", "column", F.col("value").cast("double")).write.mode(
-                    "overwrite"
-                ).parquet(f"{self.out}/metrics/run_id={self.run_id}/rule={rule.name}")
-            # r6: collect the manifest rows from the verdicts parquet
-            # that was JUST written, not from the verd plan — verd is
-            # not persisted, so a plan-side collect would re-execute
-            # the whole verdict subtree (the per-bucket images scan +
-            # the violation aggregate) a second time per rule. The
-            # written table is a handful of rows; reading it back is a
-            # metadata-cheap job and provably the same data.
-            from pyspark.errors import AnalysisException
-
-            try:
-                verd_tbl = self.spark.read.parquet(
-                    f"{self.out}/verdicts/run_id={self.run_id}"
-                    f"/rule={rule.name}"
-                )
-                if aligned:
-                    # the dir may already hold buckets _inherit wrote
-                    # earlier this invocation (dynamic partition
-                    # overwrite merges) — the manifest 'done' rows must
-                    # cover exactly the buckets COMPUTED here
-                    verd_tbl = verd_tbl.where(
-                        F.col("bucket").isin([int(b) for b in todo])
-                    )
-                verd_rows = verd_tbl.select(
-                    "bucket", "rows_scanned", "violation_count"
-                ).collect()
-            except AnalysisException:
-                verd_rows = []  # empty partitioned write leaves no files
-            rows = [
-                (
-                    self.run_id,
-                    rule.name,
-                    int(r["bucket"]),
-                    "done",
-                    int(r["rows_scanned"]),
-                    int(r["violation_count"]),
-                    float(time.time() - t0),
-                    seq,
-                )
-                for r in verd_rows
-            ]
-            if not aligned:
-                # global rules record a single unit even with no verdicts
-                rows = rows or [
-                    (self.run_id, rule.name, -1, "done", 0, 0,
-                     float(time.time() - t0), seq)
-                ]
-            self._append_manifest(rows)
-            vio.unpersist()
-            summary["rules_run"] += 1
+        # rows scanned per bucket, one table per distinct context (keyed
+        # by its bucket filter, None = the whole input); the fingerprint
+        # aggregate already counted the whole input's images side
+        rows_per_bucket: dict[frozenset | None, dict] = {}
+        if fp_rows is not None:
+            rows_per_bucket[None] = {
+                r["bucket"]: r["n_rows"] for r in fp_rows
+                if r["side"] == "images"
+            }
+        for (aligned, todo), rules in groups.items():
+            self._run_group(ctx, rules, aligned, todo,
+                            sample_buckets is not None, rows_per_bucket, seq)
+            summary["rules_run"] += len(rules)
+            summary["rule_groups"] += 1
         if fp_rows is not None:
             # recorded LAST: a crash mid-run leaves no fingerprint
             # table, so a later incremental_from this run finds nothing
@@ -553,61 +500,74 @@ class ValidationRun:
         unchanged: set[int],
         done: dict[str, set[int]],
         seq: int,
-        summary: dict,
-    ) -> None:
+    ) -> dict[str, set[int]]:
         """Copy the base run's materialized results for unchanged
         buckets into this run and mark them ``inherited`` in the
-        manifest. Mutates ``done`` so the main rule loop skips them.
+        manifest. Returns {rule: buckets inherited} and adds them to
+        ``done``, so group planning skips them.
 
         Copies move only RESULT rows (violations + tiny verdicts) —
         never input data — so the cost is proportional to the base
         run's violation count, not the table. Missing base artifacts
-        narrow safely: no verdicts for a rule → that rule recomputes;
-        no violations dir → the rule was clean, nothing to copy."""
+        narrow safely: no verdict for a (rule, bucket) → it recomputes;
+        no violation rows where the verdicts count some → the rule
+        recomputes. Base results are read from each kind's run_id root
+        and filtered on its ``rule`` partition column, because
+        partitionBy escapes characters such as '=' and ':' in rule
+        names (a hand-built ``rule=<name>`` path could miss)."""
         from pyspark.errors import AnalysisException
 
-        def _missing(e: AnalysisException) -> bool:
-            # UNABLE_TO_INFER_SCHEMA = the dir exists but holds no data
-            # files — how an empty partitioned write (a CLEAN rule's
-            # violations) materializes
-            return ("PATH_NOT_FOUND" in str(e)
-                    or "Path does not exist" in str(e)
-                    or "UNABLE_TO_INFER_SCHEMA" in str(e))
+        def _read_base(kind: str) -> DataFrame | None:
+            try:
+                return self.spark.read.parquet(
+                    f"{self.out}/{kind}/run_id={base_run_id}"
+                )
+            except AnalysisException as e:
+                # UNABLE_TO_INFER_SCHEMA = the dir exists but holds no
+                # data files — how an empty partitioned write (a run
+                # whose rules were all clean) materializes
+                if not any(m in str(e) for m in (
+                    "PATH_NOT_FOUND", "Path does not exist",
+                    "UNABLE_TO_INFER_SCHEMA",
+                )):
+                    raise  # unreadable ≠ clean: do not drop violations
+                return None
 
+        base_verd = _read_base("verdicts")
+        if base_verd is None:
+            return {}  # base verdicts gone (expired?) — recompute
+        vrows = {
+            (r["rule"], int(r["bucket"])): r
+            for r in base_verd.where(
+                F.col("rule").isin([r.name for r in self.rules])
+            ).collect()
+        }
+        base_vio = _read_base("violations")
+        base_metrics = _read_base("metrics")
         base_done = self.completed(base_run_id)
         all_buckets = set(range(self.num_buckets))
         manifest_rows: list[tuple] = []
+        inherited: dict[str, set[int]] = {}
         for rule in self.rules:
             aligned = rule_is_bucket_aligned(rule, ctx)
             bdone = base_done.get(rule.name, set())
             if aligned:
-                inh = sorted(
-                    (unchanged & bdone) - done.get(rule.name, set())
-                )
+                inh = (unchanged & bdone) - done.get(rule.name, set())
             else:
                 # a global rule's verdict depends on every row: inherit
                 # only when the ENTIRE input is unchanged
                 inh = (
-                    [-1]
+                    {-1}
                     if unchanged == all_buckets and -1 in bdone
                     and not done.get(rule.name)
-                    else []
+                    else set()
                 )
-            if not inh:
+            # buckets without a base verdict recompute
+            verd = [vrows[(rule.name, b)] for b in sorted(inh)
+                    if (rule.name, b) in vrows]
+            if not verd:
                 continue
-            try:
-                verd = self.spark.read.parquet(
-                    f"{self.out}/verdicts/run_id={base_run_id}/rule={rule.name}"
-                ).where(F.col("bucket").isin(inh))
-                vrows = verd.collect()
-            except AnalysisException as e:
-                if _missing(e):
-                    continue  # base verdicts gone (expired?) — recompute
-                raise
-            have = {int(r["bucket"]) for r in vrows}
-            inh = [b for b in inh if b in have]
-            if not inh:
-                continue
+            inh = {int(r["bucket"]) for r in verd}
             # Which violation rows travel with these verdicts?
             # * global rule: ALL of them — its violations carry real
             #   bucket values (e.g. salted uniqueness buckets by its own
@@ -620,62 +580,43 @@ class ValidationRun:
             #   inherit leaves -1 to the recompute leg, which re-derives
             #   table-level checks from the (unchanged) schema; copying
             #   it there could go stale if day-2 fixed the schema.
-            vio_filter = None
-            if aligned:
-                full = (done.get(rule.name, set()) | set(inh)) >= all_buckets
-                vio_filter = F.col("bucket").isin(
-                    list(inh) + ([-1] if full else [])
-                )
             vio_df = None
-            try:
-                vio_df = self.spark.read.parquet(
-                    f"{self.out}/violations/run_id={base_run_id}/rule={rule.name}"
-                )
-                if vio_filter is not None:
-                    vio_df = vio_df.where(vio_filter)
-            except AnalysisException as e:
-                if not _missing(e):
-                    raise  # unreadable ≠ clean: do not drop violations
-            total_v = sum(
-                int(r["violation_count"]) for r in vrows
-                if int(r["bucket"]) in set(inh)
-            )
-            if vio_df is None and total_v > 0:
+            if base_vio is not None:
+                vio_df = base_vio.where(F.col("rule") == rule.name)
+                if aligned:
+                    full = (done.get(rule.name, set()) | inh) >= all_buckets
+                    vio_df = vio_df.where(
+                        F.col("bucket").isin(sorted(inh) + ([-1] if full else []))
+                    )
+            if sum(int(r["violation_count"]) for r in verd) > 0 and (
+                vio_df is None or vio_df.isEmpty()
+            ):
                 # the verdicts vouch for violations whose rows are gone
                 # (partial cleanup / expiry race) — inheriting would
                 # leave split()/quarantine blind to known-bad rows
                 continue
             if vio_df is not None:
-                self._write_partitioned(vio_df, rule.name)
-            self._write_partitioned(
-                verd.where(F.col("bucket").isin(inh)),
-                rule.name, kind="verdicts",
-            )
-            # metrics describe the whole table: valid whenever the rule
-            # is inheritable at all; the main loop overwrites them if
-            # the rule still runs on changed buckets
-            try:
-                mdf = self.spark.read.parquet(
-                    f"{self.out}/metrics/run_id={base_run_id}/rule={rule.name}"
-                )
-                mdf.write.mode("overwrite").parquet(
-                    f"{self.out}/metrics/run_id={self.run_id}/rule={rule.name}"
-                )
-            except AnalysisException as e:
-                if not _missing(e):
-                    raise
-            for r in vrows:
-                if int(r["bucket"]) not in set(inh):
-                    continue
-                manifest_rows.append((
-                    self.run_id, rule.name, int(r["bucket"]), "inherited",
-                    int(r["rows_scanned"]), int(r["violation_count"]),
-                    0.0, seq,
-                ))
+                self._write_partitioned(vio_df)
+            self._write_partitioned(base_verd.where(
+                (F.col("rule") == rule.name) & F.col("bucket").isin(sorted(inh))
+            ), "verdicts")
+            manifest_rows += [
+                (self.run_id, rule.name, int(r["bucket"]), "inherited",
+                 int(r["rows_scanned"]), int(r["violation_count"]), 0.0, seq)
+                for r in verd
+            ]
             done.setdefault(rule.name, set()).update(inh)
-            summary["buckets_inherited"] += len(inh)
+            inherited[rule.name] = inh
+        if inherited and base_metrics is not None:
+            # metrics describe the whole table: valid whenever the rule
+            # is inheritable at all; the group run overwrites them if
+            # the rule still runs on changed buckets
+            base_metrics.where(F.col("rule").isin(sorted(inherited))).write.mode(
+                "overwrite"
+            ).partitionBy("rule").parquet(f"{self.out}/metrics/run_id={self.run_id}")
         if manifest_rows:
             self._append_manifest(manifest_rows)
+        return inherited
 
     def _filtered_ctx(self, ctx: RuleContext, todo: set[int] | None) -> RuleContext:
         if todo is None:
@@ -704,38 +645,92 @@ class ValidationRun:
         # manifest marked incomplete.
         return dataclasses.replace(ctx, images=f_img, captions=f_cap)
 
-    def _verdicts(
-        self, ctx: RuleContext, rule: Rule, vio: DataFrame, aligned: bool
-    ) -> DataFrame:
-        rows_per_bucket = (
-            ctx.with_bucket(ctx.images.select(ctx.key_col))
-            .groupBy("bucket")
-            .agg(F.count("*").alias("rows_scanned"))
+    def _run_group(
+        self, ctx: RuleContext, rules: list[Rule], aligned: bool,
+        todo: frozenset, canary: bool, rows_per_bucket: dict, seq: int,
+    ) -> None:
+        """Run one group of rules as one unit: their violations as one
+        persisted union written once, verdicts built on the driver from
+        one (rule, bucket) count collect and the context's
+        rows-per-bucket table, metrics written once, then ONE manifest
+        batch. Until that batch is published the whole group counts as
+        incomplete; a rerun overwrites the same partitions."""
+        t0 = time.time()
+        key = None if len(todo) == self.num_buckets else todo
+        gctx = self._filtered_ctx(ctx, key)
+        vio = functools.reduce(DataFrame.unionByName, [
+            r.violations(gctx).withColumn("rule", F.lit(r.name)) for r in rules
+        ]).persist()
+        self._write_partitioned(vio)
+        # table-level violations (no bucket) count under -1, like the
+        # partition they are written to
+        counts = {
+            (r["rule"], r["bucket"]): r["n"]
+            for r in vio.groupBy(
+                "rule", F.coalesce("bucket", F.lit(-1)).alias("bucket")
+            ).agg(F.count("*").alias("n")).collect()
+        }
+        vio.unpersist()
+        if key not in rows_per_bucket:
+            rows_per_bucket[key] = {
+                r["bucket"]: r["count"]
+                for r in gctx.with_bucket(gctx.images.select(gctx.key_col))
+                .groupBy("bucket").count().collect()
+            }
+        rpb = rows_per_bucket[key]
+        verdicts = []
+        for rule in rules:
+            if aligned:
+                # one verdict per bucket that holds input rows
+                verdicts += [
+                    (rule.name, b, n, counts.get((rule.name, b), 0))
+                    for b, n in rpb.items()
+                ]
+            else:
+                # global rule: the run-level unit is recorded as bucket -1
+                verdicts.append((
+                    rule.name, -1, sum(rpb.values()),
+                    sum(n for (r, _), n in counts.items() if r == rule.name),
+                ))
+        self._write_partitioned(
+            self.spark.createDataFrame(verdicts, VERDICT_SCHEMA), "verdicts"
         )
-        vio_counts = vio.groupBy(
-            F.coalesce("bucket", F.lit(-1)).alias("bucket")
-        ).agg(F.count("*").alias("violation_count"))
-        if not aligned:
-            # global rule: the run-level unit is recorded as bucket -1
-            total = ctx.images.count()
-            n_vio = vio.count()
-            return self.spark.createDataFrame(
-                [(-1, total, n_vio)],
-                "bucket long, rows_scanned long, violation_count long",
-            )
-        verd = rows_per_bucket.join(vio_counts, "bucket", "left_outer")
-        return verd.select(
-            "bucket",
-            "rows_scanned",
-            F.coalesce("violation_count", F.lit(0)).alias("violation_count"),
-        )
+        # north_rule: the checkpoint layout carries stats metrics.
+        # Metrics describe the WHOLE table, so they are computed on the
+        # unfiltered ctx even for a bucket-filtered resume (recomputing
+        # them is idempotent). Canary runs are the exception: scanning
+        # the whole table for metrics would defeat the 1/(N/k) cost
+        # point, so they use the sampled ctx — the follow-up full run
+        # overwrites with whole-table metrics.
+        mctx = gctx if canary else ctx
+        metrics = [
+            m.select(F.lit(rule.name).alias("rule"), "metric", "column",
+                     F.col("value").cast("double"))
+            for rule in rules
+            if (m := rule.metrics(mctx)) is not None
+        ]
+        if metrics:
+            functools.reduce(DataFrame.unionByName, metrics).write.mode(
+                "overwrite"
+            ).partitionBy("rule").parquet(f"{self.out}/metrics/run_id={self.run_id}")
+        # the manifest 'done' rows cover exactly the buckets COMPUTED
+        # here (a NULL or out-of-range custom bucket is never one)
+        wall = float(time.time() - t0)
+        self._append_manifest([
+            (self.run_id, r, b, "done", n, v, wall, seq)
+            for r, b, n, v in verdicts
+            if not aligned or b in todo
+        ])
 
-    def _write_partitioned(self, df: DataFrame, rule: str, kind: str = "violations") -> None:
-        path = f"{self.out}/{kind}/run_id={self.run_id}/rule={rule}"
-        out = df.withColumn("bucket", F.coalesce("bucket", F.lit(-1)))
-        if "rule" in out.columns:
-            out = out.drop("rule")
-        out.write.mode("overwrite").partitionBy("bucket").parquet(path)
+    def _write_partitioned(self, df: DataFrame, kind: str = "violations") -> None:
+        """Write ``df`` (with ``rule`` and ``bucket`` columns) under
+        ``<kind>/run_id=<run>/rule=<rule>/bucket=<b>``. Dynamic
+        partition overwrite replaces only the partitions ``df`` holds."""
+        df.withColumn("bucket", F.coalesce("bucket", F.lit(-1))).write.mode(
+            "overwrite"
+        ).partitionBy("rule", "bucket").parquet(
+            f"{self.out}/{kind}/run_id={self.run_id}"
+        )
 
     def split(self, images: DataFrame) -> str:
         """Write the clean/quarantine split for this run's violations.

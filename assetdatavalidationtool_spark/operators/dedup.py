@@ -383,9 +383,12 @@ def connected_components(
     # whether the directed union is ever materialized depends on the
     # contraction gate below.
     _par = max(spark.sparkContext.defaultParallelism * 2, 8)
+    # a pair with a NULL endpoint links nothing: dropped here, on every
+    # path (the driver finish would otherwise factorize NULL to code -1,
+    # which indexes — and silently relabels — the last node)
     pairs_p = pairs.select(
         F.col(src).alias("pa"), F.col(dst).alias("pb")
-    ).persist()
+    ).where(F.col("pa").isNotNull() & F.col("pb").isNotNull()).persist()
     n_directed = 2 * pairs_p.count()
 
     root = checkpoint_dir or tempfile.mkdtemp(prefix="spark_cc_")

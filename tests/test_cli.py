@@ -48,6 +48,8 @@ def test_cli_image_run_and_resume(images_dir, tmp_path_factory):
         "--num-buckets", "8", "--cores", "4", "--split",
     )
     assert r1["rules_run"] == 10 and r1["rules_skipped"] == 0
+    # six aligned rules share one group, four global rules the other
+    assert r1["rule_groups"] == 2
     # --split wrote the clean/quarantine sinks from the run's violations
     assert r1["split"] == f"{out}/split/run_id=cli1"
     assert os.path.isdir(f"{out}/split/run_id=cli1/status=clean")
@@ -65,6 +67,7 @@ def test_cli_image_run_and_resume(images_dir, tmp_path_factory):
         "--num-buckets", "8", "--cores", "4",
     )
     assert r2["rules_run"] == 0 and r2["rules_skipped"] == 10
+    assert r2["rule_groups"] == 0
     assert r2["total_violations"] == r1["total_violations"]
     # metrics landed in the layout (stats + drift rules emit them)
     assert os.path.isdir(f"{out}/metrics/run_id=cli1/rule=stats")

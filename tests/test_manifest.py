@@ -792,3 +792,213 @@ def test_fingerprint_null_swap_detected(spark):
     fb = {(r["side"], r["bucket"]): r["fp"] for r in bucket_fingerprints(
         RuleContext(spark=spark, images=b, captions=None, num_buckets=4)).collect()}
     assert fa != fb
+
+
+# ---------------------------------------------------------------------------
+# Group execution: equivalence with per-rule runs, crash between groups,
+# rule names that partitionBy escapes
+# ---------------------------------------------------------------------------
+
+def _layout_dirs(out):
+    """Partition directories holding parquet files under violations/,
+    verdicts/ and metrics/, relative to ``out``."""
+    import os
+
+    found = set()
+    for kind in ("violations", "verdicts", "metrics"):
+        for d, _, names in os.walk(f"{out}/{kind}"):
+            if any(n.endswith(".parquet") for n in names):
+                found.add(os.path.relpath(d, out))
+    return found
+
+
+def _manifest_rows(spark, out, run_id):
+    """Manifest rows of a run without wall_sec / seq."""
+    return sorted(
+        (r["rule"], r["bucket"], r["status"], r["rows_scanned"],
+         r["violation_count"])
+        for r in spark.read.parquet(f"{out}/manifest")
+        .where(F.col("run_id") == run_id).collect()
+    )
+
+
+def _rows(df):
+    """The rows of ``df`` as a multiset (values may be NULL)."""
+    from collections import Counter
+
+    return Counter(tuple(r) for r in df.collect())
+
+
+def _group_rules():
+    from assetdatavalidationtool_spark.rules import SchemaRule, StatsRule
+    from assetdatavalidationtool_spark.rules.schema import ColumnSpec
+
+    # schema declares only image_id: every other column is a
+    # table-level (bucket -1) violation of an aligned rule; salted
+    # phash uniqueness is a global rule with real-bucket violations
+    return make_rules() + [
+        SchemaRule([ColumnSpec("image_id", "string", nullable=False)]),
+        UniquenessRule(["phash"], salted=True),
+        StatsRule(columns=["w", "fmt"]),
+    ]
+
+
+def test_grouped_run_equals_per_rule_runs(spark, data, tmp_path_factory):
+    """One grouped run writes the same partitions, violations, verdicts,
+    metrics and manifest rows (up to wall_sec / seq) as running every
+    rule alone, each invocation then being a one-rule group."""
+    from assetdatavalidationtool_spark.rules import RuleContext, RuleSet
+    from assetdatavalidationtool_spark.manifest import rule_is_bucket_aligned
+
+    images, captions = data
+    grouped_out = str(tmp_path_factory.mktemp("run_grouped"))
+    grouped = ValidationRun(spark, grouped_out, _group_rules(), num_buckets=8,
+                            run_id="g")
+    s = grouped.run(images, captions)
+    assert s["rule_groups"] == 2 and s["rules_run"] == len(_group_rules())
+
+    single_out = str(tmp_path_factory.mktemp("run_single"))
+    for rule in _group_rules():
+        single = ValidationRun(spark, single_out, [rule], num_buckets=8,
+                               run_id="g")
+        assert single.run(images, captions)["rule_groups"] == 1
+
+    assert _layout_dirs(grouped_out) == _layout_dirs(single_out)
+    assert _rows(grouped.violations()) == _rows(single.violations())
+    assert _rows(grouped.verdicts()) == _rows(single.verdicts())
+    assert _rows(grouped.metrics()) == _rows(single.metrics())
+    assert (_manifest_rows(spark, grouped_out, "g")
+            == _manifest_rows(spark, single_out, "g"))
+
+    # aligned verdicts match RuleSet's join-built formulation on every
+    # real bucket
+    ctx = RuleContext(spark=spark, images=images, captions=captions,
+                      num_buckets=8, run_id="g")
+    aligned = [r for r in _group_rules() if rule_is_bucket_aligned(r, ctx)]
+    want = RuleSet(aligned).run(ctx)["verdicts"].where("bucket >= 0")
+    names = [r.name for r in aligned]
+    got = grouped.verdicts().where(F.col("rule").isin(names))
+    cols = ["rule", "bucket", "rows_scanned", "violation_count"]
+    assert _rows(got.select(*cols)) == _rows(want.select(*cols))
+
+
+def test_crash_between_group_appends_resumes_only_second_group(
+    spark, data, tmp_path_factory
+):
+    """A crash after the first group's manifest batch and before the
+    second's: the resume runs only the second group, and the layout
+    ends equal to a fresh run."""
+    images, captions = data
+
+    class CrashesOnSecondGroup(ValidationRun):
+        appends = 0
+
+        def _append_manifest(self, rows):
+            self.appends += 1
+            if self.appends == 2:
+                raise RuntimeError("simulated crash before the second batch")
+            super()._append_manifest(rows)
+
+    out = str(tmp_path_factory.mktemp("run_crash_groups"))
+    with pytest.raises(RuntimeError):
+        CrashesOnSecondGroup(spark, out, make_rules(), num_buckets=8,
+                             run_id="rG").run(images, captions)
+    resumed = ValidationRun(spark, out, make_rules(), num_buckets=8,
+                            run_id="rG")
+    s = resumed.run(images, captions)
+    # the aligned group (uniqueness, referential, row_invariant) is done;
+    # only the global group (drift) reruns
+    assert s["rule_groups"] == 1 and s["rules_run"] == 1
+    assert s["rules_skipped"] == 3
+
+    fresh_out = str(tmp_path_factory.mktemp("run_crash_groups_fresh"))
+    fresh = ValidationRun(spark, fresh_out, make_rules(), num_buckets=8,
+                          run_id="rG")
+    fresh.run(images, captions)
+    assert _rows(resumed.violations()) == _rows(fresh.violations())
+    assert _rows(resumed.verdicts()) == _rows(fresh.verdicts())
+    assert _rows(resumed.metrics()) == _rows(fresh.metrics())
+    assert (_manifest_rows(spark, out, "rG")
+            == _manifest_rows(spark, fresh_out, "rG"))
+
+
+def test_escaped_rule_names_survive_incremental_run(spark, data, tmp_path_factory):
+    """Rule names with '=' and ':' are escaped in partition directory
+    names; a day-1 run and an incremental_from run over it read them
+    back through the rule partition column, not a hand-built path."""
+    from dataclasses import dataclass
+
+    from assetdatavalidationtool_spark.rules.base import Rule
+
+    @dataclass
+    class WideRule(Rule):
+        """Aligned: its name starts with 'header'."""
+
+        name: str = "header:w=wide"
+
+        def violations(self, ctx):
+            return ctx.images.where(F.col("w") > 200).select(
+                F.lit(self.name).alias("rule"),
+                F.col(ctx.key_col).alias("key"),
+                F.lit("w").alias("column"),
+                F.lit("wide").alias("detail"),
+                ctx.bucket_of(F.col(ctx.key_col)).alias("bucket"),
+            )
+
+    @dataclass
+    class WebpRule(Rule):
+        """Global, with real-bucket violations and metrics."""
+
+        name: str = "fmt:webp=flagged"
+
+        def violations(self, ctx):
+            return ctx.images.where(F.col("fmt") == "webp").select(
+                F.lit(self.name).alias("rule"),
+                F.col(ctx.key_col).alias("key"),
+                F.lit("fmt").alias("column"),
+                F.lit("webp").alias("detail"),
+                ctx.bucket_of(F.col(ctx.key_col)).alias("bucket"),
+            )
+
+        def metrics(self, ctx):
+            return ctx.images.groupBy("fmt").count().select(
+                F.lit("count").alias("metric"), F.col("fmt").alias("column"),
+                F.col("count").cast("double").alias("value"),
+            )
+
+    def rules():
+        return [WideRule(), WebpRule()]
+
+    images, captions = data
+    out = str(tmp_path_factory.mktemp("run_escaped"))
+    day1 = ValidationRun(spark, out, rules(), num_buckets=8, run_id="d1")
+    day1.run(images, captions, record_fingerprints=True)
+    names = {r["rule"] for r in day1.verdicts().select("rule").collect()}
+    assert names == {"header:w=wide", "fmt:webp=flagged"}
+    assert day1.violations().where(F.col("rule") == "header:w=wide").count() > 0
+    assert day1.violations().where(F.col("rule") == "fmt:webp=flagged").count() > 0
+
+    # identical input: everything inherited, results equal day 1's
+    day2 = ValidationRun(spark, out, rules(), num_buckets=8, run_id="d2")
+    s2 = day2.run(images, captions, incremental_from="d1")
+    assert s2["rules_run"] == 0 and s2["buckets_inherited"] == 8 + 1
+    assert _rows(day2.violations().drop("run_id")) == _rows(
+        day1.violations().drop("run_id"))
+    assert _rows(day2.verdicts().drop("run_id")) == _rows(
+        day1.verdicts().drop("run_id"))
+    assert _rows(day2.metrics().drop("run_id")) == _rows(
+        day1.metrics().drop("run_id"))
+
+    # one image dropped: its bucket and the global rule recompute, the
+    # rest is inherited, and the result equals a fresh run
+    victim = images.select("image_id").orderBy("image_id").first()[0]
+    images3 = images.where(F.col("image_id") != victim)
+    day3 = ValidationRun(spark, out, rules(), num_buckets=8, run_id="d3")
+    s3 = day3.run(images3, captions, incremental_from="d1")
+    assert s3["buckets_inherited"] == 7 and s3["rules_run"] == 2
+    fresh = ValidationRun(spark, str(tmp_path_factory.mktemp("run_escaped_f")),
+                          rules(), num_buckets=8, run_id="d3")
+    fresh.run(images3, captions)
+    assert _rows(day3.violations()) == _rows(fresh.violations())
+    assert _rows(day3.verdicts()) == _rows(fresh.verdicts())
+    assert _rows(day3.metrics()) == _rows(fresh.metrics())

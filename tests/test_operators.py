@@ -1799,3 +1799,25 @@ def test_connected_components_driver_finish_matches_distributed(spark):
              for r in connected_components(
                  spairs, driver_finish_max_pairs=0).collect()}
     assert sdriver == swant and sdriver["img_4"] == "img_1"
+
+
+def test_connected_components_null_endpoints_agree_across_paths(spark):
+    """A pair with a NULL endpoint links nothing: the driver finish and
+    the distributed path (driver_finish_max_pairs=0) drop it alike. The
+    driver path used to factorize NULL to code -1, which indexed the
+    LAST node and merged c into the (d, e) cluster."""
+    from assetdatavalidationtool_spark.operators import connected_components
+
+    pairs = spark.createDataFrame(
+        [("a", "b"), ("c", None), (None, "b"), ("d", "e"), (None, None)],
+        "doc_a string, doc_b string",
+    )
+
+    def labels(**kw):
+        return {r["doc_id"]: r["cluster_id"]
+                for r in connected_components(pairs, **kw).collect()}
+
+    driver = labels()
+    assert driver == labels(driver_finish_max_pairs=0)
+    assert driver == labels(contract_min_edges=0, driver_finish_max_pairs=0)
+    assert driver == {"a": "a", "b": "a", "d": "d", "e": "d"}
